@@ -8,7 +8,9 @@ Run from the repository root. ``--trace 0`` prints the end-to-end metrics;
 ``--trace 1`` first runs the untraced measurement as a child process, then
 measures traced, prints the per-layer metrics (including the tracing
 overhead on each end-to-end metric: traced minus untraced) and writes the
-spans to ``.perfbench_work/trace-<workload>-<seed>.json``.
+spans to ``.perfbench_work/trace-<workload>-<seed>.json``. Both measure the
+shorter window ``--short`` selects (one warm ``query_mix`` pass instead of
+three), so a traced run stays within its time limit.
 The last stdout line is one JSON object:
 ``{"correct": …, "attempted": …, "failed": …, "metrics": {name: {"value", "unit"}}}``.
 Metric names, units and the workload list live in ``BENCHMARK.json``; what
@@ -34,7 +36,6 @@ SETUPS = 3
 #: the issue's names for the generic end-to-end metrics, per workload
 ISSUE_NAMES = {
     "season_push": {"throughput_per_s": ("push_docs_per_s", "docs/s")},
-    "season_archive": {"throughput_per_s": ("archive_rows_per_s", "rows/s")},
     "query_mix": {
         "throughput_per_s": ("mix_warm_queries_per_s", "1/s"),
         "op_s": ("mix_geomean_s", "s"),
@@ -98,7 +99,7 @@ def warm_up(spark) -> None:
     df.select(geo.area_m2(F.col("g"), "EUREF").alias("a"), "k").groupBy("k").sum("a").collect()
 
 
-def measure(name: str, seed: int, seconds: float, traced: bool, work: str, nproc: int):
+def measure(name: str, seed: int, seconds: float, traced: bool, short: bool, work: str, nproc: int):
     """Set up SETUPS times, then measure one window on the last set-up.
     Returns (end-to-end metrics, per-layer metrics, workload, tracer).
 
@@ -122,7 +123,9 @@ def measure(name: str, seed: int, seconds: float, traced: bool, work: str, nproc
                 session_start_s = time.perf_counter() - t0
             warm_up(spark)
             tracer = Tracer(spark, name, traced)
-            wl = WORKLOADS[name](spark, tracer, os.path.join(work, f"{mode}-{rep}"), seed, nproc)
+            wl = WORKLOADS[name](
+                spark, tracer, os.path.join(work, f"{mode}-{rep}"), seed, nproc, short
+            )
             wl.setup()
             setups.append(time.perf_counter() - t0)
         jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
@@ -144,7 +147,7 @@ def measure(name: str, seed: int, seconds: float, traced: bool, work: str, nproc
     layers["session.start_s"] = session_start_s
     if traced:
         layers.update(layer_metrics(tracer, replay_event_log(
-            os.path.join(eventlog_dir, app_id), start_ms, end_ms
+            os.path.join(eventlog_dir, app_id), start_ms, end_ms, f"bench/{name}/"
         )))
     return e2e, layers, wl, tracer
 
@@ -209,6 +212,11 @@ def main() -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    ap.add_argument(
+        "--short", action="store_true",
+        help="the shorter window a traced run measures (one warm query_mix pass); "
+        "--trace 1 sets it, and passes it to its untraced reference",
+    )
     args = ap.parse_args()
     # a terminated run still stops its JVM and mock API and removes its files
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
@@ -229,7 +237,8 @@ def main() -> int:
         # the traced one, so the difference is the tracing alone
         ref = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--workload", args.workload,
-             "--seed", str(args.seed), "--seconds", str(args.seconds), "--trace", "0"],
+             "--seed", str(args.seed), "--seconds", str(args.seconds), "--trace", "0",
+             "--short"],
             stdout=subprocess.PIPE, text=True, check=False,
         )
         if ref.returncode != 0:
@@ -246,7 +255,8 @@ def main() -> int:
     configure_env(work, nproc)
     try:
         e2e, layers, wl, tracer = measure(
-            args.workload, args.seed, args.seconds, bool(args.trace), work, nproc
+            args.workload, args.seed, args.seconds, bool(args.trace),
+            bool(args.trace) or args.short, work, nproc,
         )
         if args.trace:
             for metric, value in untraced.items():

@@ -86,9 +86,11 @@ def median(values: list[float]) -> float:
     return float(statistics.median(values)) if values else 0.0
 
 
-def replay_event_log(path: str, since_ms: float, until_ms: float) -> dict:
-    """Task and job totals for jobs submitted in [since_ms, until_ms], and
-    the submission times of every job in the log.
+def replay_event_log(path: str, since_ms: float, until_ms: float, group_prefix: str) -> dict:
+    """Task and job totals for the jobs submitted in [since_ms, until_ms]
+    whose job group starts with ``group_prefix`` (so the jobs of the
+    benchmark's own correctness checks, which run outside any span, are left
+    out), and the submission times of every job in the log.
 
     Reads the plain-text JSON event log Spark writes when
     ``spark.eventLog.enabled`` is on (compression and rolling off).
@@ -106,7 +108,8 @@ def replay_event_log(path: str, since_ms: float, until_ms: float) -> dict:
             kind = ev["Event"]
             if kind == "SparkListenerJobStart":
                 job_submit.append(ev["Submission Time"])
-                if since_ms <= ev["Submission Time"] <= until_ms:
+                group = (ev.get("Properties") or {}).get("spark.jobGroup.id") or ""
+                if since_ms <= ev["Submission Time"] <= until_ms and group.startswith(group_prefix):
                     jobs[ev["Job ID"]] = set(ev["Stage IDs"])
                     for s in ev["Stage IDs"]:
                         stage_of[s] = ev["Job ID"]

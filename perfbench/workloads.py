@@ -3,8 +3,9 @@ batch driver): the next operation starts when the previous one finished.
 
 Every workload has ``setup()`` (inputs, mock API), ``run(seconds)`` (the
 measured window; returns end-to-end values and per-layer values) and
-``close()``. Correctness is checked after every operation, outside its
-timed wall; a failed check is counted, printed, and fails the run.
+``close()``. Correctness is checked outside the timed walls: after every
+round on season_push, after the window on query_mix; a failed check is
+counted, printed, and fails the run.
 """
 
 from __future__ import annotations
@@ -46,12 +47,16 @@ FAIL_EVERY = 40
 
 #: input sizes (documents or rows per season and operation)
 PUSH_DOCS = 500
-ARCHIVE_ROWS = 1500
+#: repeats of the render-alone probe of a traced season_push run
+PROBE_REPEATS = 3
 #: operations per window at least: the first and three steady ones, so a
 #: stall during one steady operation does not move its workload's medians
 MIN_OPS = 4
 STREAM_FILES = 6
 STREAM_FILE_DOCS = 200
+#: warm passes per query_mix window at least, so each query's warm time is a
+#: median of three
+MIN_WARM_PASSES = 3
 MIX_SCALE = 10  # orders ×1000: lineitem ≈ 40k rows, like sf0.01
 MIX_DATA_SEED = 42
 
@@ -61,7 +66,6 @@ QUERY_MIX = [
     "q116_kll_grouped",
     "llm_bpe_merges",
     "llm_pack_sequences",
-    "q100_scd2_buffered",
     "flagship_order_documents",
     "llm_minhash_lsh",
 ]
@@ -162,8 +166,9 @@ class Workload:
     name = ""
     uses_mock = False
 
-    def __init__(self, spark, tracer, work: str, seed: int, nproc: int) -> None:
+    def __init__(self, spark, tracer, work: str, seed: int, nproc: int, short: bool) -> None:
         self.spark = spark
+        self.short = short  # the shorter window of a traced run (query_mix only)
         self.tracer = tracer
         self.work = work
         self.seed = seed
@@ -209,11 +214,11 @@ class SeasonPush(Workload):
     uses_mock = True
 
     def make_inputs(self) -> None:
-        self.zips = {}
+        self.zips, self.ids = {}, {}
         for season in (2023, 2024):
-            z = self.path(f"data{season}.zip")
-            ids = inputs.write_season_zip(z, season, PUSH_DOCS, self.seed)
-            self.zips[season] = (z, sorted(document_id(season, i) for i in ids))
+            self.zips[season] = self.path(f"data{season}.zip")
+            ids = inputs.write_season_zip(self.zips[season], season, PUSH_DOCS, self.seed)
+            self.ids[season] = sorted(document_id(season, i) for i in ids)
 
     def run(self, seconds: float) -> tuple[dict, dict]:
         deadline = time.perf_counter() + seconds
@@ -222,7 +227,7 @@ class SeasonPush(Workload):
             i = len(walls)
             t0 = time.perf_counter()
             with self.tracer.span("op"):
-                for season, (zip_path, _ids) in self.zips.items():
+                for season, zip_path in self.zips.items():
                     _obs, docs = season_docs(self.spark, self.tracer, season, zip_path)
                     with self.tracer.span("sinks.http_push.push"):
                         audit = push_documents(
@@ -237,7 +242,6 @@ class SeasonPush(Workload):
         e2e = steady(walls, acked)
         per_round = {k: median([r[k] for r in rounds]) for k in rounds[0]}
         layers = {f"sinks.http_push.{k}": per_round[k] for k in ("attempts", "retries", "ok_ratio")}
-        layers["sources.shapefile.rows"] = PUSH_DOCS
         layers.update(
             {
                 f"mock_api.{k}": per_round[k]
@@ -247,12 +251,96 @@ class SeasonPush(Workload):
         return e2e, layers
 
     def probe(self) -> dict:
-        return StreamProbe(self).run()
+        return {**self.render_probe(), **self.archive_probe(), **StreamProbe(self).run()}
+
+    def steady_round_s(self) -> float:
+        return median([s["seconds"] for s in self.tracer.spans if s["layer"] == "op"][1:])
+
+    def render_probe(self) -> dict:
+        """The share of a steady round's wall spent in the shapefile read, in
+        the document render alone (a noop-sink write of the documents,
+        geometry UDFs included) and, the rest after the plan, in the HTTP
+        sink (POSTs, retries, checkpoint, audit log); and the rows the reader
+        returned."""
+        tracer = self.tracer
+        steady_ops = [s["id"] for s in tracer.spans if s["layer"] == "op"][1:]
+        round_s = self.steady_round_s()
+
+        def per_round(layer: str) -> float:
+            inside = [s["seconds"] for s in tracer.spans if s["layer"] == layer and s["parent"] in steady_ops]
+            return sum(inside) / len(steady_ops)
+
+        renders, rows = [], []
+        for _ in range(PROBE_REPEATS):
+            render_s = 0.0
+            for season, zip_path in self.zips.items():
+                obs, docs = season_docs(self.spark, tracer, season, zip_path)
+                with tracer.span("pipelines.crowdsorsa.docs") as span:
+                    noop(docs)
+                render_s += span["seconds"]
+                rows.append(obs.count())
+            renders.append(render_s)
+        render_s = median(renders)
+        read_s = per_round("sources.shapefile.read")
+        plan_s = per_round("pipelines.crowdsorsa.plan")
+        return {
+            "sources.shapefile.rows": median(rows),
+            "trace.read_share": read_s / round_s,
+            "trace.render_share": render_s / round_s,
+            "trace.sink_share": 1.0 - (read_s + plan_s + render_s) / round_s,
+        }
+
+    def archive_probe(self) -> dict:
+        """The round's documents archived as parquet by month
+        (``write_partitioned``) instead of pushed, and each geometry UDF alone
+        as a noop-sink projection, net of a noop scan of its input."""
+        tracer, files, size = self.tracer, [], []
+        for season, zip_path in self.zips.items():
+            _obs, docs = season_docs(self.spark, tracer, season, zip_path)
+            month = F.substring(
+                F.col("document.publicDocument.gatherings")[0]["eventDate"]["begin"], 1, 7
+            )
+            out = self.path(f"archive{season}")
+            with tracer.span("sinks.writers.write_partitioned"):
+                write_partitioned(
+                    docs.select("obs_id", "document_json", month.alias("event_month")),
+                    out,
+                    partition_by=["event_month"],
+                )
+            parts = glob.glob(os.path.join(out, "event_month=*", "*.parquet"))
+            files.append(len(parts))
+            size.append(sum(os.path.getsize(p) for p in parts))
+            ids = pq.read_table(out, columns=["obs_id"]).column("obs_id")
+            n, distinct = len(ids), len(set(ids.to_pylist()))
+            self.checks.expect(
+                n == distinct == PUSH_DOCS,
+                f"archive {season}: {n} rows, {distinct} distinct obs_id",
+            )
+            shutil.rmtree(out, ignore_errors=True)
+
+        obs = {s: read_shapefile_zip(self.spark, z) for s, z in self.zips.items()}
+        geom = F.col("geometry_wkb")
+        probes = [("make_valid", 2023, geo.st_make_valid_multi(geom))]
+        for season, crs in ((2023, "WGS84"), (2024, "EUREF")):
+            probes += [("area", season, geo.area_m2(geom, crs)),
+                       ("geojson", season, geo.st_as_geojson_struct(geom))]
+        udf_s = 0.0
+        for udf, season, column in probes:
+            with tracer.span("sources.shapefile.scan") as scan:
+                noop(obs[season].select(geom))
+            with tracer.span(f"functions.geo.{udf}") as span:
+                noop(obs[season].select(column))
+            udf_s += span["seconds"] - scan["seconds"]
+        return {
+            "sinks.writers.files": median(files),
+            "sinks.writers.bytes": median(size),
+            "trace.udf_share": udf_s / self.steady_round_s(),
+        }
 
     def _check_round(self, i: int) -> tuple[int, dict]:
         stats = self.mock.stats(reset=True)
         c = self.checks
-        expected = sorted(ids for _z, season_ids in self.zips.values() for ids in season_ids)
+        expected = sorted(d for season_ids in self.ids.values() for d in season_ids)
         c.expect(sorted(stats["document_ids"]) == expected, f"round {i}: API got the wrong documentIds")
         c.expect(stats["bad_json"] == 0, f"round {i}: {stats['bad_json']} bodies were not JSON")
         ok = attempts = 0
@@ -281,77 +369,6 @@ class SeasonPush(Workload):
             "requests_per_connection": stats["requests"] / max(1, stats["connections"]),
             "busy_s": stats["busy_s"],
         }
-
-
-class SeasonArchive(Workload):
-    """Both season zips → documents → parquet archive partitioned by month."""
-
-    name = "season_archive"
-
-    def make_inputs(self) -> None:
-        self.zips = {
-            season: self.path(f"data{season}.zip") for season in (2023, 2024)
-        }
-        for season, z in self.zips.items():
-            inputs.write_season_zip(z, season, ARCHIVE_ROWS, self.seed)
-
-    def run(self, seconds: float) -> tuple[dict, dict]:
-        deadline = time.perf_counter() + seconds
-        walls, files, size = [], [], []
-        while len(walls) < MIN_OPS or time.perf_counter() < deadline:
-            i = len(walls)
-            t0 = time.perf_counter()
-            with self.tracer.span("op"):
-                for season, zip_path in self.zips.items():
-                    _obs, docs = season_docs(self.spark, self.tracer, season, zip_path)
-                    month = F.substring(
-                        F.col("document.publicDocument.gatherings")[0]["eventDate"]["begin"], 1, 7
-                    )
-                    with self.tracer.span("sinks.writers.write_partitioned"):
-                        write_partitioned(
-                            docs.select("obs_id", "document_json", month.alias("event_month")),
-                            self.path(f"archive{season}-{i}"),
-                            partition_by=["event_month"],
-                        )
-            walls.append(time.perf_counter() - t0)
-            for season in self.zips:
-                out = self.path(f"archive{season}-{i}")
-                parts = glob.glob(os.path.join(out, "event_month=*", "*.parquet"))
-                files.append(len(parts))
-                size.append(sum(os.path.getsize(p) for p in parts))
-                ids = pq.read_table(out, columns=["obs_id"]).column("obs_id")
-                n, distinct = len(ids), len(set(ids.to_pylist()))
-                self.checks.expect(
-                    n == distinct == ARCHIVE_ROWS,
-                    f"round {i}: archive {season} has {n} rows, {distinct} distinct obs_id",
-                )
-                self.attempted += ARCHIVE_ROWS
-                self.failed += max(0, ARCHIVE_ROWS - distinct)
-                shutil.rmtree(out, ignore_errors=True)
-        e2e = steady(walls, [2 * ARCHIVE_ROWS] * len(walls))
-        layers = {
-            "sources.shapefile.rows": ARCHIVE_ROWS,
-            "sinks.writers.files": median(files),
-            "sinks.writers.bytes": median(size),
-        }
-        return e2e, layers
-
-    def probe(self) -> dict:
-        """Each geometry UDF alone, and the document render alone, as
-        noop-sink projections."""
-        obs = {}
-        for season, zip_path in self.zips.items():
-            obs[season], docs = season_docs(self.spark, self.tracer, season, zip_path)
-            with self.tracer.span("pipelines.crowdsorsa.docs"):
-                noop(docs)
-        with self.tracer.span("functions.geo.make_valid"):
-            noop(obs[2023].select(geo.st_make_valid_multi(F.col("geometry_wkb"))))
-        for season, crs in ((2023, "WGS84"), (2024, "EUREF")):
-            with self.tracer.span("functions.geo.area"):
-                noop(obs[season].select(geo.area_m2(F.col("geometry_wkb"), crs)))
-            with self.tracer.span("functions.geo.geojson"):
-                noop(obs[season].select(geo.st_as_geojson_struct(F.col("geometry_wkb"))))
-        return {}
 
 
 class StreamProbe:
@@ -484,8 +501,8 @@ def _has_float(dtype) -> bool:
 
 
 class QueryMix(Workload):
-    """Eight registry queries: one cold pass against an empty artifact root,
-    then warm passes until the window ends."""
+    """Seven registry queries: one cold pass against an empty artifact root,
+    then warm passes until the window ends, at least MIN_WARM_PASSES."""
 
     name = "query_mix"
     EXPECTED = os.path.join(HERE, "expected_mix.json")
@@ -532,25 +549,29 @@ class QueryMix(Workload):
     def run(self, seconds: float) -> tuple[dict, dict]:
         cold: dict = {}
         t0 = time.perf_counter()
-        deadline = t0 + seconds  # the window holds the cold pass and ≥1 warm pass
         with self.tracer.span("op"):
             cold_dfs = {q: self._one(q, "cold_", cold) for q in self.order}
         cold_wall = time.perf_counter() - t0
-        for q, df in cold_dfs.items():
-            self._check(q, df, "cold")
+        # the warm passes fill the window, and there are at least MIN_WARM_PASSES
+        # (one in the shorter window of a traced run)
+        min_passes = 1 if self.short else MIN_WARM_PASSES
         warm: dict = {}
-        warm_wall, passes = 0.0, 0
-        while not passes or time.perf_counter() < deadline:
+        pass_walls: list[float] = []
+        deadline = time.perf_counter() + seconds
+        while len(pass_walls) < min_passes or time.perf_counter() < deadline:
             t1 = time.perf_counter()
             with self.tracer.span("op"):
                 dfs = {q: self._one(q, "", warm) for q in self.order}
-            warm_wall += time.perf_counter() - t1
-            passes += 1
+            pass_walls.append(time.perf_counter() - t1)
+        for q, df in cold_dfs.items():
+            self._check(q, df, "cold")
         for q, df in dfs.items():
             self._check(q, df, "warm")
         per_query = {q: median([b + a for b, a, _ in warm[q]]) for q in warm}
         e2e = {
-            "throughput_per_s": sum(len(v) for v in warm.values()) / warm_wall,
+            # per median pass, so a stall of the machine in one pass does not move it
+            "throughput_per_s": sum(len(v) for v in warm.values()) / len(pass_walls)
+            / median(pass_walls),
             "op_s": _geomean(list(per_query.values())),
             "first_op_s": cold_wall,
         }
@@ -563,4 +584,4 @@ class QueryMix(Workload):
         return e2e, layers
 
 
-WORKLOADS = {w.name: w for w in (SeasonPush, SeasonArchive, QueryMix)}
+WORKLOADS = {w.name: w for w in (SeasonPush, QueryMix)}
