@@ -8,7 +8,9 @@ Statistics Finland municipality codes, the data behind
 ``geofi::municipality_key_2023`` used at crowdsorsa-etl-2023.R:52), and the
 taxon decode dimension.
 
-Generators are pure functions of (seed, n) — same rows every run.
+Generators are pure functions of (seed, n) — same rows every run. The Spark
+frames are built with sources/local_rows.local_frame (Arrow-backed
+``LocalTableScan``), like the shapefile reader's.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ from crowdsorsa_etl_spark.schemas import (
     OBSERVATIONS_2024,
     TAXON_KEY,
 )
+from crowdsorsa_etl_spark.sources.local_rows import local_frame
 
 #: Statistics Finland municipality codes, FULL 2023 classification (public
 #: data, 309 municipalities — the table behind ``geofi::municipality_key_2023``
@@ -191,7 +194,7 @@ def observation_rows_2023(n: int = 200, seed: int = 7) -> list[tuple]:
 
 
 def observations_2023(spark: SparkSession, n: int = 200, seed: int = 7) -> DataFrame:
-    return spark.createDataFrame(observation_rows_2023(n, seed), OBSERVATIONS_2023)
+    return local_frame(spark, observation_rows_2023(n, seed), OBSERVATIONS_2023)
 
 
 def observation_rows_2024(n: int = 200, seed: int = 11) -> list[tuple]:
@@ -225,16 +228,16 @@ def observation_rows_2024(n: int = 200, seed: int = 11) -> list[tuple]:
 
 
 def observations_2024(spark: SparkSession, n: int = 200, seed: int = 11) -> DataFrame:
-    return spark.createDataFrame(observation_rows_2024(n, seed), OBSERVATIONS_2024)
+    return local_frame(spark, observation_rows_2024(n, seed), OBSERVATIONS_2024)
 
 
 def municipality_dim(spark: SparkSession) -> DataFrame:
     """The broadcast dimension replacing geofi::municipality_key_2023."""
-    return spark.createDataFrame(MUNICIPALITIES, MUNICIPALITY_KEY)
+    return local_frame(spark, MUNICIPALITIES, MUNICIPALITY_KEY)
 
 
 def taxon_dim(spark: SparkSession) -> DataFrame:
     rows = [(k, v, 2023) for k, v in TAXA_2023.items()] + [
         (k, v, 2024) for k, v in TAXA_2024.items()
     ]
-    return spark.createDataFrame(rows, TAXON_KEY)
+    return local_frame(spark, rows, TAXON_KEY)

@@ -8,8 +8,10 @@ DataFrame of typed attribute columns plus a ``geometry_wkb`` BinaryType
 column (the engine's canonical geometry representation, functions/geo.py).
 
 Scale notes: season shapefiles are small (thousands of rows — bounded by the
-reference's own ≤10 docs/s sink), so parsing happens driver-side and
-``spark.createDataFrame`` ships the rows. For genuinely large archives the
+reference's own ≤10 docs/s sink), so parsing happens driver-side and the
+rows ship to the JVM as one Arrow table (sources/local_rows.local_frame), a
+``LocalTableScan`` that no later scan has to re-read through a Python
+worker. For genuinely large archives the
 same ``parse_shp``/``parse_dbf`` functions run distributed over
 ``spark.read.format("binaryFile")`` + ``mapInPandas`` — the parser is
 byte-buffer-in/rows-out either way.
@@ -31,6 +33,7 @@ import zipfile
 from pyspark.sql import DataFrame, SparkSession
 
 from crowdsorsa_etl_spark.functions.geo import polygons_to_wkb
+from crowdsorsa_etl_spark.sources.local_rows import local_frame
 
 Ring = list[tuple[float, float]]
 
@@ -376,7 +379,7 @@ def read_shapefile_zip(
         ]
         + [T.StructField("geometry_wkb", T.BinaryType(), True)]
     )
-    return spark.createDataFrame(data, schema)
+    return local_frame(spark, data, schema)
 
 
 # ---------------------------------------------------------------------------

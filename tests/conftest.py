@@ -41,3 +41,49 @@ def spark():
     s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+#: .dbf layouts of the two season exports (field name, type, width, decimals)
+SEASON_FIELDS = {
+    2023: [
+        ("id", "C", 16, 0),
+        ("kuntakoodi", "C", 4, 0),
+        ("havaittu", "C", 19, 0),
+        ("laji", "C", 40, 0),
+        ("torjunta", "C", 10, 0),
+    ],
+    2024: [
+        ("tunniste", "C", 16, 0),
+        ("kunta", "C", 40, 0),
+        ("havaittu", "C", 10, 0),
+        ("torjuttu", "C", 10, 0),
+        ("laji", "C", 40, 0),
+        ("tiheys", "N", 8, 2),
+    ],
+}
+
+
+@pytest.fixture()
+def season_zip(tmp_path):
+    """``season_zip(season, n)`` → path of a season export zip holding the
+    synthetic observation fixture rows (sources/observations.py)."""
+    from crowdsorsa_etl_spark.functions.geo import _parse_wkb
+    from crowdsorsa_etl_spark.sources.observations import (
+        observation_rows_2023,
+        observation_rows_2024,
+    )
+    from crowdsorsa_etl_spark.sources.shapefile import write_shapefile_zip
+
+    def make(season: int, n: int = 60) -> str:
+        rows = (observation_rows_2023 if season == 2023 else observation_rows_2024)(n)
+        fields = SEASON_FIELDS[season]
+        path = str(tmp_path / f"season{season}_{n}.zip")
+        write_shapefile_zip(
+            path,
+            field_specs=fields,
+            rows=[list(r[: len(fields)]) for r in rows],
+            geometries=[_parse_wkb(r[len(fields)]) for r in rows],
+        )
+        return path
+
+    return make

@@ -11,6 +11,7 @@ import pytest
 
 from crowdsorsa_etl_spark.config import SinkConfig
 from crowdsorsa_etl_spark.sinks.http_push import (
+    AUDIT_SCHEMA,
     push_documents,
     push_partition,
     write_audit_log,
@@ -309,3 +310,47 @@ class TestPushDocuments:
         logged = spark.read.json(out_dir)
         assert logged.count() == 3
         assert all(TOKEN not in (r.response_body or "") for r in logged.collect())
+
+    def test_push_plans_one_shuffle_and_arrow_hop(self, spark, mock_api):
+        """dedup + num_partitions hash-partitions on the key once (the dedup
+        aggregate reuses it) and pushes through MapInArrow — no pickled
+        Python round trip on either side of the POST loop."""
+        import re
+
+        docs = spark.createDataFrame(
+            _rows("a", "b") + _rows("a"), "obs_id string, document_json string"
+        )
+        audit = push_documents(docs, _cfg(mock_api), num_partitions=2)
+        plan = audit._sc._jvm.PythonSQLUtils.explainString(
+            audit._jdf.queryExecution(), "formatted"
+        )
+        assert "MapInArrow" in plan
+        assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1
+        assert "hashpartitioning(obs_id" in plan
+        assert "BatchEvalPython" not in plan
+        assert audit.schema == AUDIT_SCHEMA
+
+    def test_count_posts_each_document_once(self, spark, mock_api):
+        """``count()`` must run the push — the side effect is neither pruned
+        away nor doubled — for every deduplicated document."""
+        MockApi.seen.clear()
+        ids = [f"cnt-{i}" for i in range(25)]
+        docs = spark.createDataFrame(
+            _rows(*ids) + _rows(*ids[:5]), "obs_id string, document_json string"
+        )
+        assert push_documents(docs, _cfg(mock_api), num_partitions=3).count() == 25
+        assert sorted(s["body"]["id"] for s in MockApi.seen) == sorted(ids)
+
+    def test_audit_batches_are_bounded(self, spark, mock_api, monkeypatch):
+        """Audit rows leave the POST loop in chunks of AUDIT_BATCH_ROWS; a
+        partition with more documents than that returns every row once."""
+        from crowdsorsa_etl_spark.sinks import http_push
+
+        monkeypatch.setattr(http_push, "AUDIT_BATCH_ROWS", 4)
+        ids = [f"chunk-{i}" for i in range(11)]
+        docs = spark.createDataFrame(
+            _rows(*ids), "obs_id string, document_json string"
+        ).coalesce(1)
+        rows = push_documents(docs, _cfg(mock_api), dedup=False).collect()
+        assert sorted(r.doc_key for r in rows) == sorted(ids)
+        assert all(r.ok and r.attempts == 1 for r in rows)

@@ -407,10 +407,17 @@ class TestRound8bPlans:
         assert "MapInPandas" not in plan
         assert "Join" not in plan
 
-    def test_hilbert_keys_no_exchange(self, spark):
-        """The Hilbert index is a pure projection over the scan."""
+    def test_hilbert_keys_one_fanout_exchange(self, spark):
+        """The Hilbert index is a pure projection over the scan; the only
+        Exchange is cpu_fanout's round-robin widening of the one-split
+        fixture scan (the interpreted curve fold then runs at session
+        parallelism), never a hash shuffle or a join."""
+        import re
+
         plan = plan_of(QUERIES["q105_hilbert_layout"](spark, SF_DIR))
-        assert "Exchange" not in plan
+        assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1
+        assert plan.count("RoundRobinPartitioning") == 1
+        assert "hashpartitioning" not in plan
         assert "Join" not in plan
         assert "EvalPython" not in plan
 
@@ -556,3 +563,40 @@ class TestRound18Plans:
         partition cross the wire), not a global Sort + Limit."""
         plan = plan_of(QUERIES["llm_weighted_reservoir"](spark, SF_DIR))
         assert "TakeOrderedAndProject" in plan
+
+
+class TestSeasonPlans:
+    def test_season_render_scans_are_local_tables(self, spark, season_zip):
+        """The shapefile rows and the municipality dim ship to the JVM as
+        Arrow tables: every scan of the season render is a LocalTableScan,
+        never a pickled ``Scan ExistingRDD`` re-read through Python."""
+        import re
+
+        from pyspark.sql import functions as F
+
+        from crowdsorsa_etl_spark.config import config_for_season
+        from crowdsorsa_etl_spark.pipelines.crowdsorsa import (
+            documents_2023,
+            documents_2024,
+        )
+        from crowdsorsa_etl_spark.sources.observations import municipality_dim
+        from crowdsorsa_etl_spark.sources.shapefile import read_shapefile_zip
+
+        def obs(season):
+            return read_shapefile_zip(spark, season_zip(season)).withColumn(
+                "area_m2", F.lit(None).cast("double")
+            )
+
+        plans = {
+            2023: plan_of(
+                documents_2023(
+                    obs(2023), municipality_dim(spark), config_for_season(2023, "dev")
+                )
+            ),
+            2024: plan_of(documents_2024(obs(2024), config_for_season(2024, "dev"))),
+        }
+        for season, plan in plans.items():
+            assert "ExistingRDD" not in plan, season
+            assert "LocalTableScan" in plan, season
+        # 2023 joins the dim: both of its inputs are local tables
+        assert len(re.findall(r"^\(\d+\) LocalTableScan", plans[2023], re.M)) == 2

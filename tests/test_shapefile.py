@@ -69,6 +69,102 @@ class TestShapefileReader:
         assert u2["facts"][0]["integerValue"] == 100  # 10x10 planar square
 
 
+def _list_backed(monkeypatch, spark, zip_path: str):
+    """The same reader with its frame built by ``createDataFrame(list)`` —
+    the pickled-RDD path the Arrow-backed frame replaced."""
+    from crowdsorsa_etl_spark.sources import shapefile
+
+    with monkeypatch.context() as m:
+        m.setattr(
+            shapefile,
+            "local_frame",
+            lambda s, rows, schema: s.createDataFrame(rows, schema),
+        )
+        return read_shapefile_zip(spark, zip_path)
+
+
+def _assert_parity(monkeypatch, spark, zip_path: str):
+    arrow = read_shapefile_zip(spark, zip_path)
+    listed = _list_backed(monkeypatch, spark, zip_path)
+    assert arrow.schema == listed.schema
+    rows = arrow.collect()
+    assert rows == listed.collect()  # same values, same row order
+    return arrow, rows
+
+
+class TestArrowBackedReader:
+    """read_shapefile_zip builds its frame from an Arrow table
+    (sources/local_rows.local_frame); schema inference, types, nulls and
+    row order must match ``createDataFrame(list)`` of the same rows."""
+
+    @pytest.mark.parametrize("season", [2023, 2024])
+    def test_season_zip_parity(self, spark, monkeypatch, season_zip, season):
+        df, rows = _assert_parity(monkeypatch, spark, season_zip(season))
+        assert len(rows) == 60
+        assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+
+    def test_empty_zip(self, spark, monkeypatch, tmp_path):
+        path = str(tmp_path / "empty.zip")
+        write_shapefile_zip(path, field_specs=FIELDS, rows=[], geometries=[])
+        df, rows = _assert_parity(monkeypatch, spark, path)
+        assert rows == [] and df.count() == 0
+        assert df.columns[-1] == "geometry_wkb"
+
+    def test_blank_fields_read_as_null(self, spark, monkeypatch, tmp_path):
+        path = str(tmp_path / "blanks.zip")
+        rows = [
+            ["OBS-1", None, "2024-06-01", None, "lupiini", None],
+            ["OBS-2", "Espoo", None, None, "lupiini", 2.5],
+        ]
+        write_shapefile_zip(
+            path, field_specs=FIELDS, rows=rows, geometries=[[SQUARE], [SQUARE]]
+        )
+        _df, got = _assert_parity(monkeypatch, spark, path)
+        assert got[0].kunta is None and got[0].tiheys is None
+        assert got[1].havaittu is None and got[1].tiheys == 2.5
+        assert all(r.torjuttu is None for r in got)
+
+    def test_latin1_text(self, spark, monkeypatch, tmp_path):
+        path = str(tmp_path / "latin1.zip")
+        rows = [
+            ["OBS-1", "Hämeenlinna", "2024-06-01", None, "jättiputki", 1.0],
+            ["OBS-2", "Föglö", "2024-06-02", None, "lupiini", 1.0],
+        ]
+        write_shapefile_zip(
+            path, field_specs=FIELDS, rows=rows, geometries=[[SQUARE], [SQUARE]]
+        )
+        _df, got = _assert_parity(monkeypatch, spark, path)
+        assert [r.kunta for r in got] == ["Hämeenlinna", "Föglö"]
+        assert got[0].laji == "jättiputki"
+
+    def test_float_in_long_column_raises(self, spark, monkeypatch, tmp_path):
+        """The first non-null value types the column: ``2.5`` under an
+        inferred LongType must raise (pyarrow alone would truncate it to 2)."""
+        import zipfile
+
+        from pyspark.errors import PySparkTypeError
+
+        path = str(tmp_path / "mixed.zip")
+        write_shapefile_zip(
+            path,
+            field_specs=[("n", "N", 8, 0)],
+            rows=[[1], [2]],
+            geometries=[[SQUARE], [SQUARE]],
+        )
+        with zipfile.ZipFile(path) as zf:
+            members = {name: zf.read(name) for name in zf.namelist()}
+        assert members["data.dbf"].count(b"       2") == 1
+        members["data.dbf"] = members["data.dbf"].replace(b"       2", b"     2.5")
+        with zipfile.ZipFile(path, "w") as zf:
+            for name, data in members.items():
+                zf.writestr(name, data)
+
+        with pytest.raises(PySparkTypeError):
+            read_shapefile_zip(spark, path)
+        with pytest.raises(PySparkTypeError):
+            _list_backed(monkeypatch, spark, path)
+
+
 def _shp_file(records: list[bytes]) -> bytes:
     """Assemble a minimal valid .shp from raw record-content buffers."""
     import struct

@@ -220,3 +220,50 @@ class TestCorruptRecords:
             spark.read.schema(schema).option("mode", "FAILFAST").json(
                 path
             ).collect()
+
+
+class TestLocalFrame:
+    """sources/local_rows.local_frame: driver rows → Arrow-backed
+    LocalTableScan with the same schema, rows and checks as
+    ``createDataFrame(list)``."""
+
+    @pytest.mark.parametrize(
+        "name", ["observations_2023", "observations_2024", "municipality_dim", "taxon_dim"]
+    )
+    def test_list_backed_sources_parity(self, spark, monkeypatch, name):
+        from crowdsorsa_etl_spark.sources import observations
+
+        df = getattr(observations, name)(spark)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+        # the same source with its frame built by createDataFrame(list)
+        monkeypatch.setattr(
+            observations,
+            "local_frame",
+            lambda s, rows, schema: s.createDataFrame(rows, schema),
+        )
+        listed = getattr(observations, name)(spark)
+        assert "ExistingRDD" in listed._jdf.queryExecution().executedPlan().toString()
+        rows = df.collect()
+        assert df.schema == listed.schema and rows == listed.collect()
+        assert df.rdd.getNumPartitions() == min(
+            len(rows), spark.sparkContext.defaultParallelism
+        )
+
+    def test_null_in_non_nullable_field_raises(self, spark):
+        from pyspark.errors import PySparkValueError
+
+        from crowdsorsa_etl_spark.schemas import MUNICIPALITY_KEY
+        from crowdsorsa_etl_spark.sources.local_rows import local_frame
+
+        with pytest.raises(PySparkValueError):
+            local_frame(spark, [("20", "Akaa"), ("91", None)], MUNICIPALITY_KEY)
+
+    def test_wrong_type_raises_instead_of_casting(self, spark):
+        from pyspark.errors import PySparkTypeError
+
+        from crowdsorsa_etl_spark.sources.local_rows import local_frame
+
+        schema = T.StructType([T.StructField("n", T.LongType())])
+        with pytest.raises(PySparkTypeError):
+            local_frame(spark, [(1,), (2.5,)], schema)
